@@ -23,9 +23,13 @@ object CertStore {
 
   val partitionCol = "ts_month"
 
-  /** Append a batch of canonical rows, partitioned + sorted for scan speed. */
+  /** Append a batch of canonical rows, partitioned + sorted for scan speed.
+    * The frame is projected onto [[CertDomain.columns]] first, so the files
+    * always hold exactly the schema [[read]] declares: a frame missing a
+    * column fails here instead of reading back as nulls. */
   def write(df: DataFrame, path: String, mode: SaveMode = SaveMode.Append): Unit =
-    df.withColumn(partitionCol, date_format(col("ts"), "yyyyMM"))
+    df.select(CertDomain.columns.map(col): _*)
+      .withColumn(partitionCol, date_format(col("ts"), "yyyyMM"))
       .repartition(col(partitionCol))
       .sortWithinPartitions("base_domain", "domain", "fingerprint")
       .write.mode(mode)
@@ -35,9 +39,15 @@ object CertStore {
   /** Read the table back; `ts_month` appears as a partition column. A
     * streaming store's per-epoch directories (StreamIngest.writeEpoch)
     * surface as an extra `epoch` partition column — an idempotency
-    * implementation detail, dropped here. */
+    * implementation detail, dropped here.
+    *
+    * The data schema is declared ([[CertDomain.schema]], which [[write]]
+    * enforces), not inferred: inference runs a Spark job over the Parquet
+    * footers, and the Server calls `read` on every request and every
+    * `/stream` poll. Partition columns are still discovered from the
+    * paths, so the result matches the inferred schema. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = spark.read.schema(CertDomain.schema).parquet(path)
     if (df.columns.contains("epoch")) df.drop("epoch") else df
   }
 

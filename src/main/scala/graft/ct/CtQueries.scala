@@ -54,20 +54,30 @@ object CtQueries {
 
   /** GET /subdomains/<base> (app.py:112-114):
     * SELECT domain, max(ts) last_seen WHERE base_domain=? GROUP BY domain
-    * ORDER BY domain. */
+    * ORDER BY domain.
+    *
+    * `coalesce(1)` before the sort: a single partition already satisfies
+    * the sort's ordered distribution, so the global sort needs no
+    * range-partition sampling job and no second shuffle. The scan and
+    * partial aggregate keep their parallelism; only the merge and the sort
+    * run in one task, over the same answer the Server then collects whole
+    * into one JVM anyway. */
   def subdomains(certDomains: DataFrame, base: String): DataFrame =
     certDomains.filter(col("base_domain") === base)
       .groupBy(col("domain"))
       .agg(max(col("ts")).as("last_seen"))
+      .coalesce(1)
       .orderBy(col("domain"))
 
   /** GET /recent/<base> (app.py:123-127): distinct domains seen in the last
-    * day. `now` is the parameterized reference time. */
+    * day. `now` is the parameterized reference time. Sorted in one task
+    * for the same reason as [[subdomains]]. */
   def recent(certDomains: DataFrame, base: String, now: Timestamp): DataFrame = {
     val dayAgo = new Timestamp(now.getTime - 24L * 3600 * 1000)
     monthBound(certDomains, Some(dayAgo), None)
       .filter(col("base_domain") === base && col("ts") > lit(dayAgo))
       .select(col("domain")).distinct()
+      .coalesce(1)
       .orderBy(col("domain"))
   }
 

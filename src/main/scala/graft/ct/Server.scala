@@ -6,7 +6,9 @@ import java.sql.{Date, Timestamp}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The reference's REST surface (/root/reference/api/app.py) served over
   * the Spark engine — dependency-free via the JDK's HttpServer.
@@ -154,6 +156,27 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
         } else None
       })
 
+  /** One /stream poll: up to `streamBatch` rows strictly after `cursor`.
+    * A store that does not exist yet polls as empty; any other failure is
+    * logged and polls as empty too, so the caller retries it at the idle
+    * cadence instead of ending the stream. */
+  private def pollStream(cursor: Option[(Timestamp, String, String, String)]): Array[Row] =
+    try {
+      val batch = cursor match {
+        case Some((t, f, dm, lg)) =>
+          CtQueries.streamTailAfter(table(), t, f, dm, lg, streamBatch)
+        case None =>
+          table().orderBy(col("ts"), col("fingerprint"), col("domain"), col("log_name"))
+            .limit(streamBatch)
+      }
+      batch.collect()
+    } catch {
+      case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" => Array.empty
+      case NonFatal(e) =>
+        System.err.println(s"[stream] poll failed: $e; retrying in ${streamPollMs}ms")
+        Array.empty
+    }
+
   private def handle(path: String, ex: HttpExchange): Unit = {
     if (!ipAllowed(ex)) { send(ex, 403, jval(Map("error" -> "Access denied"))); return }
     if (rateLimited(ex)) { send(ex, 429, jval(Map("error" -> "rate limit exceeded"))); return }
@@ -207,16 +230,7 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
             val out = ex.getResponseBody
             var cursor: Option[(Timestamp, String, String, String)] = None
             while (streaming) {
-              val base = cursor match {
-                case Some((t, f, dm, lg)) =>
-                  CtQueries.streamTailAfter(table(), t, f, dm, lg, streamBatch)
-                case None =>
-                  table().orderBy(org.apache.spark.sql.functions.col("ts"),
-                    org.apache.spark.sql.functions.col("fingerprint"),
-                    org.apache.spark.sql.functions.col("domain"),
-                    org.apache.spark.sql.functions.col("log_name")).limit(streamBatch)
-              }
-              val rows = base.collect() // sorted (ts, fingerprint, domain, log_name)
+              val rows = pollStream(cursor) // sorted (ts, fingerprint, domain, log_name)
               if (rows.nonEmpty) {
                 rows.foreach { r =>
                   out.write(s"data: ${jval(r.toSeq)}\n\n".getBytes(UTF_8))
@@ -230,7 +244,11 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
               // full batch ⇒ backlog: drain immediately, only idle-sleep when caught up
               if (rows.length < streamBatch) Thread.sleep(streamPollMs)
             }
-          } catch { case _: Throwable => /* client closed */ }
+          } catch {
+            // only the connection ends a stream: a failed write to a
+            // closed client, or stop() interrupting the idle sleep
+            case _: java.io.IOException | _: InterruptedException => ()
+          }
           finally { activeStreams.decrementAndGet(); ex.close() }
         }
       case _ => send(ex, 404, jval(Map("error" -> "not found")))

@@ -188,4 +188,40 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       assert(allSeen, s"stream stalled before delivering all rows; got:\n$sb")
     } finally srv.stop()
   }
+
+  test("/stream opened before the store exists delivers rows written later, same connection") {
+    val dir = Files.createTempDirectory("server-late").resolve("store").toString
+    val polls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val srv = new Server(spark, () => { polls.incrementAndGet(); CertStore.read(spark, dir) },
+      dir, port = 0, now = () => ts("2024-01-15 12:00:00"), streamPollMs = 50).start()
+    try {
+      val req = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${srv.boundPort}/stream")).GET().build()
+      val resp = client.send(req, HttpResponse.BodyHandlers.ofInputStream())
+      assert(resp.statusCode() == 200)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      // the subscriber has polled the missing store more than once
+      while (polls.get() < 3 && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(polls.get() >= 3, "stream never polled the missing store")
+      val rows = Seq("late1", "late2").zipWithIndex.map { case (d, i) =>
+        CertDomain(ts("2024-01-15 10:00:00"), s"$d.example.com", "example.com", i.toString * 64,
+          "CN=CA", s"CN=$d", Seq(s"$d.example.com"),
+          ts("2024-01-01 00:00:00"), ts("2025-01-01 00:00:00"), "log1")
+      }
+      CertStore.write(rows.toDF(), dir, SaveMode.Overwrite)
+      val sb = new StringBuilder
+      val buf = new Array[Byte](8192)
+      val in = resp.body()
+      def allSeen = Seq("late1", "late2").forall(d => sb.toString.contains(s"$d.example.com"))
+      var open = true
+      while (open && !allSeen && System.nanoTime() < deadline) {
+        val n = in.read(buf)
+        if (n < 0) open = false
+        else sb.append(new String(buf, 0, n, java.nio.charset.StandardCharsets.UTF_8))
+      }
+      in.close()
+      assert(open, s"stream ended before the store appeared; got:\n$sb")
+      assert(allSeen, s"late rows never reached the subscriber; got:\n$sb")
+    } finally srv.stop()
+  }
 }
